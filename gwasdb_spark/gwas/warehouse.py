@@ -12,17 +12,60 @@ Physical design for the 93M-variant / 100 TB case (SURVEY.md §4):
 - gold `combined` is the persisted denormalized view (the reference's
   `combined` table / export view, R/postgres_process.Rmd:137) — persisted
   because Spark views re-execute while the app re-queries interactively.
+
+Every table written through `Warehouse.write` carries `_schema.json`: the
+schema Spark reads the table back with (the data columns in write order,
+then the `chr` partition column, all nullable), written after the parquet
+commit. `read` hands it to `spark.read.schema(...)`, which skips the
+footer-sampling job a bare `spark.read.parquet` runs to infer the schema
+on every read. Spark's file listing ignores `_`-prefixed names, so the
+sidecar is never read as data. A table without one (written before
+sidecars existed, or by plain `df.write`) is read by inference.
+
+`combined` is rebuilt into `combined_tmp_`, then swapped in by renaming
+the live table aside to `combined.old`; `Warehouse(...)` repairs whatever
+a crash between those renames left behind.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 SILVER_TABLES = ("b37", "marker", "study", "gwas", "no_gwas_result")
 CHR_PARTITIONED = {"b37", "gwas", "combined", "combined_tmp_"}
+SCHEMA_FILE = "_schema.json"
+_INT = re.compile(r"[+-]?\d+")
+
+
+def _nullable(t: T.DataType) -> T.DataType:
+    """`t` with every field, element and value nullable: the schema
+    Spark's parquet reader hands back for data it wrote as `t`."""
+    if isinstance(t, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, T.ArrayType):
+        return T.ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, T.MapType):
+        return T.MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
+def _chr_type(table_dir: str) -> T.DataType | None:
+    """The type Spark's partition discovery infers from the `chr=`
+    directory names when it is int (every value a 32-bit integer); None
+    for any other values, or none, which are left to inference."""
+    vals = [e[len("chr="):] for e in os.listdir(table_dir) if e.startswith("chr=")]
+    if vals and all(_INT.fullmatch(v) and -(1 << 31) <= int(v) < (1 << 31) for v in vals):
+        return T.IntegerType()
+    return None
 
 
 class Warehouse:
@@ -32,6 +75,7 @@ class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._recover_combined()
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -48,18 +92,62 @@ class Warehouse:
             df = df.withColumn(
                 "chr", F.split(F.col("kgp_id"), ":").getItem(0).cast("int")
             )
+        partitioned = name in CHR_PARTITIONED and "chr" in df.columns
         writer = df.write.mode(mode)
-        if name in CHR_PARTITIONED and "chr" in df.columns:
+        if partitioned:
             df = df.sortWithinPartitions("chr", "pos") if "pos" in df.columns else df
             writer = df.write.mode(mode).partitionBy("chr")
+        data = _nullable(df.drop("chr").schema if partitioned else df.schema)
+        # Pin the schema again only if every file in the table will match
+        # it; otherwise drop the pin before writing, so a crash mid-write
+        # never leaves a stale one.
+        pinned = self.schema(name)
+        if pinned is not None and partitioned:
+            pinned = T.StructType([f for f in pinned.fields if f.name != "chr"])
+        pin = mode == "overwrite" or not self.has_table(name) or pinned == data
+        if not pin:
+            self._unpin(name)
         writer.parquet(self.path(name))
+        if pin:
+            self._pin(name, data, partitioned)
 
     def append(self, name: str, df: DataFrame) -> None:
         """INSERT INTO ... SELECT (SURVEY.md U2) as a partitioned append."""
         self.write(name, df, mode="append")
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+        """The table under its pinned schema (no Spark job), or by
+        parquet schema inference when it has none."""
+        schema = self.schema(name)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(name))
+
+    def schema(self, name: str) -> T.StructType | None:
+        """The table's pinned `_schema.json`, or None."""
+        try:
+            with open(os.path.join(self.path(name), SCHEMA_FILE)) as f:
+                return T.StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return None
+
+    def _pin(self, name: str, data: T.StructType, partitioned: bool) -> None:
+        fields = list(data.fields)
+        if partitioned:
+            chr_type = _chr_type(self.path(name))
+            if chr_type is None:
+                self._unpin(name)
+                return
+            fields.append(T.StructField("chr", chr_type, True))
+        dst = os.path.join(self.path(name), SCHEMA_FILE)
+        with open(dst + ".tmp", "w") as f:
+            f.write(T.StructType(fields).json())
+        os.replace(dst + ".tmp", dst)
+
+    def _unpin(self, name: str) -> None:
+        try:
+            os.remove(os.path.join(self.path(name), SCHEMA_FILE))
+        except FileNotFoundError:
+            pass
 
     def register_views(self) -> None:
         """Expose every table to SQL-text queries (entry-point 3)."""
@@ -88,11 +176,9 @@ class Warehouse:
         group. Delta/Iceberg z-order+bloom is the transactional upgrade;
         no Delta jar ships in this container (documented ROADMAP.md)."""
         idx = self.read("b37").select("kgp_id", "chr", "pos")
-        (
-            idx.repartitionByRange(n_files, "kgp_id")
-            .sortWithinPartitions("kgp_id")
-            .write.mode("overwrite")
-            .parquet(self.path("marker_index"))
+        self.write(
+            "marker_index",
+            idx.repartitionByRange(n_files, "kgp_id").sortWithinPartitions("kgp_id"),
         )
         return self.read("marker_index")
 
@@ -142,13 +228,26 @@ class Warehouse:
                 "n_control",
             )
         )
+        self._recover_combined()
         self.write("combined_tmp_", combined)
-        # atomic-ish swap: write then rename (Delta would give true ACID;
+        # rename-aside swap: at every step either `combined` or
+        # `combined.old` holds a whole table (Delta would give true ACID;
         # plain parquet keeps the dependency surface minimal here)
-        import shutil
-
-        final = self.path("combined")
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.rename(self.path("combined_tmp_"), final)
+        live, old = self.path("combined"), self.path("combined.old")
+        if os.path.exists(live):
+            os.rename(live, old)
+        os.rename(self.path("combined_tmp_"), live)
+        shutil.rmtree(old, ignore_errors=True)
         return self.read("combined")
+
+    def _recover_combined(self) -> None:
+        """Finish or roll back a `build_combined` swap a crash cut short:
+        restore `combined` from `combined.old` if the live table is
+        missing, then delete any `combined.old` / `combined_tmp_` beside
+        the live table. Assumes no other writer is mid-build."""
+        live, old = self.path("combined"), self.path("combined.old")
+        if not os.path.exists(live) and os.path.exists(old):
+            os.rename(old, live)
+        if os.path.exists(live):
+            for stale in (old, self.path("combined_tmp_")):
+                shutil.rmtree(stale, ignore_errors=True)

@@ -166,3 +166,41 @@ def study_rows() -> list[dict]:
             "comment": None,
         },
     ]
+
+
+# every table `build_warehouse` writes, plus the marker name index
+WAREHOUSE_TABLES = ("b37", "marker", "study", "gwas", "no_gwas_result", "combined", "marker_index")
+
+
+def build_warehouse(spark, root: str, raw_dir: str):
+    """The five silver tables plus gold `combined`, loaded from one
+    seeded raw study through the ingest DAG. Returns the Warehouse, with
+    the raw study's expected facts as `fixture_facts`."""
+    from gwasdb_spark import schemas as S
+    from gwasdb_spark.gwas.ingest import RawStudyInputs, ingest_study
+    from gwasdb_spark.gwas.warehouse import Warehouse
+
+    fx = write_raw_study(raw_dir)
+    w = Warehouse(spark, root)
+
+    w.write("b37", spark.createDataFrame(b37_rows(fx["snps"]), schema=S.B37))
+    w.write("study", spark.createDataFrame(study_rows(), schema=S.STUDY))
+    marker = spark.createDataFrame(
+        [
+            {"kgp_id": s["kgp_id"], "marker_name": s["snp"]}
+            for s in fx["snps"]
+            if s["snp"].startswith("rs")
+        ],
+        schema=S.MARKER,
+    )
+    w.write("marker", marker)
+
+    inputs = RawStudyInputs(
+        gwas_tsv=fx["gwas_tsv"], hwe_tsv=fx["hwe_tsv"], mfi_tsv=fx["mfi_tsv"]
+    )
+    gwas_rows, tombstones = ingest_study(spark, inputs, study_id=1, marker=marker)
+    w.write("gwas", gwas_rows)
+    w.write("no_gwas_result", tombstones)
+    w.build_combined()
+    w.fixture_facts = fx
+    return w

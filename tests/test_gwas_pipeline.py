@@ -7,42 +7,21 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from gwasdb_spark import schemas as S
 from gwasdb_spark.gwas import api
 from gwasdb_spark.gwas.audit import chr_distribution, warehouse_audit
-from gwasdb_spark.gwas.ingest import RawStudyInputs, ingest_study, next_study_id
-from gwasdb_spark.gwas.warehouse import Warehouse
+from gwasdb_spark.gwas.ingest import next_study_id
+from gwasdb_spark.gwas.warehouse import SCHEMA_FILE, Warehouse
 
-from tests.gwas_fixtures import b37_rows, study_rows, write_raw_study
+from tests.gwas_fixtures import WAREHOUSE_TABLES, build_warehouse
 
 
 @pytest.fixture(scope="module")
 def wh(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("gwas_wh"))
-    fx = write_raw_study(str(tmp_path_factory.mktemp("raw")))
-    w = Warehouse(spark, root)
-
-    w.write("b37", spark.createDataFrame(b37_rows(fx["snps"]), schema=S.B37))
-    w.write("study", spark.createDataFrame(study_rows(), schema=S.STUDY))
-    marker = spark.createDataFrame(
-        [
-            {"kgp_id": s["kgp_id"], "marker_name": s["snp"]}
-            for s in fx["snps"]
-            if s["snp"].startswith("rs")
-        ],
-        schema=S.MARKER,
+    return build_warehouse(
+        spark,
+        str(tmp_path_factory.mktemp("gwas_wh")),
+        str(tmp_path_factory.mktemp("raw")),
     )
-    w.write("marker", marker)
-
-    inputs = RawStudyInputs(
-        gwas_tsv=fx["gwas_tsv"], hwe_tsv=fx["hwe_tsv"], mfi_tsv=fx["mfi_tsv"]
-    )
-    gwas_rows, tombstones = ingest_study(spark, inputs, study_id=1, marker=marker)
-    w.write("gwas", gwas_rows)
-    w.write("no_gwas_result", tombstones)
-    w.build_combined()
-    w.fixture_facts = fx
-    return w
 
 
 def test_ingest_row_accounting(wh):
@@ -221,6 +200,85 @@ def test_marker_index_point_lookup(wh):
     probe_plan = probe._jdf.queryExecution().executedPlan().toString()
     pushed = [ln for ln in probe_plan.splitlines() if "PushedFilters" in ln]
     assert any("StringStartsWith(kgp_id,rs" in ln for ln in pushed), pushed
+
+
+def _same_table(a, b):
+    assert a.schema == b.schema
+    assert a.count() == b.count()
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+@pytest.mark.parametrize("table", WAREHOUSE_TABLES)
+def test_pinned_read_matches_inferred_read(wh, spark, table):
+    """`read` under the table's `_schema.json` returns what Spark's own
+    parquet schema inference returns: the same schema and the same rows."""
+    if not wh.has_table("marker_index"):
+        wh.build_marker_index(n_files=4)
+    assert wh.schema(table) is not None
+    _same_table(wh.read(table), spark.read.parquet(wh.path(table)))
+
+
+def test_table_without_sidecar_reads_by_inference(spark, tmp_path):
+    w = Warehouse(spark, str(tmp_path))
+    df = spark.range(6).select(F.col("id").alias("pos"), (F.col("id") % 2).alias("chr"))
+    df.write.partitionBy("chr").parquet(w.path("x"))
+    assert w.schema("x") is None
+    _same_table(w.read("x"), spark.read.parquet(w.path("x")))
+
+
+def test_overwrite_repins_the_new_schema(spark, tmp_path):
+    w = Warehouse(spark, str(tmp_path))
+    w.write("b37", spark.createDataFrame([("1:100_A_C", 1, 100)], "kgp_id string, chr int, pos int"))
+    w.write("b37", spark.createDataFrame([("2:5_A_G", 2, "A")], "kgp_id string, chr int, ref string"))
+    got = w.read("b37")
+    assert got.columns == ["kgp_id", "ref", "chr"]
+    _same_table(got, spark.read.parquet(w.path("b37")))
+
+
+def test_append_keeps_the_pin_valid(spark, tmp_path):
+    w = Warehouse(spark, str(tmp_path))
+    cols = "kgp_id string, study_id int, stat double"
+    w.append("gwas", spark.createDataFrame([("1:100_A_C", 1, 1.5)], cols))
+    w.append("gwas", spark.createDataFrame([("22:7_G_T", 2, 0.5)], cols))  # a new chr
+    assert w.schema("gwas") is not None
+    _same_table(w.read("gwas"), spark.read.parquet(w.path("gwas")))
+    assert w.read("gwas").count() == 2
+    # files of another column set: no one schema fits them all, so the
+    # pin is dropped and reads infer again
+    w.append("gwas", spark.createDataFrame([("3:9_C_A", 3)], "kgp_id string, study_id int"))
+    assert w.schema("gwas") is None
+    assert w.read("gwas").count() == 3
+
+
+@pytest.mark.parametrize(
+    "whole, partial",
+    [
+        ("combined", "combined_tmp_"),  # tmp written, live untouched
+        ("combined.old", "combined_tmp_"),  # live renamed aside, tmp not moved in
+        ("combined", "combined.old"),  # tmp moved in, old not yet deleted
+    ],
+)
+def test_combined_swap_recovers_every_crash_state(wh, spark, tmp_path, whole, partial):
+    """Each directory state a crash inside build_combined's swap can leave:
+    a fresh Warehouse recovers the whole `combined`, sidecar included, and
+    removes the other directory (here a one-partition copy)."""
+    import os
+    import shutil
+
+    src = wh.path("combined")
+    first_chr = sorted(e for e in os.listdir(src) if e.startswith("chr="))[0]
+    shutil.copytree(src, tmp_path / whole)
+    shutil.copytree(
+        src,
+        tmp_path / partial,
+        ignore=lambda d, names: [n for n in names if d == src and n.startswith("chr=") and n != first_chr],
+    )
+
+    w = Warehouse(spark, str(tmp_path))
+    assert sorted(os.listdir(tmp_path)) == ["combined"]
+    assert os.path.exists(os.path.join(w.path("combined"), SCHEMA_FILE))
+    assert w.schema("combined") == wh.schema("combined")
+    _same_table(w.read("combined"), wh.read("combined"))
 
 
 def test_literal_prefix_extraction():
